@@ -12,6 +12,13 @@ sbt -batch compile
 echo "== sbt test =="
 sbt -batch test
 echo "== Verify + DuckDB oracle ($SF) =="
-sbt -batch "runMain graft.Verify $SF $OUT" 2>/dev/null | tail -1
+# Verify's last stdout line names every query that failed to run; an
+# absent line means Verify itself died.
+SUMMARY="$(sbt -batch "runMain graft.Verify $SF $OUT" 2>/dev/null | grep -o '\[verify\] .*' | tail -1 || true)"
+echo "${SUMMARY:-[verify] no summary line (Verify did not finish)}"
+case "$SUMMARY" in
+  *"failed: none"*) ;;
+  *) echo "== gate FAILED: Verify =="; exit 1 ;;
+esac
 python3 scripts/check.py "$SF" "$OUT"
 echo "== gate PASSED =="

@@ -28,7 +28,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("l2_sq"),
       new ExpressionInfo(classOf[L2SqExpr].getName, "l2_sq"),
       (exprs: Seq[Expression]) => L2SqExpr(exprs(0), exprs(1))))
-    // the custom-plan tier: native as-of join strategy
+    // the custom-plan tier: native as-of join and histogram fill strategies
     ext.injectPlannerStrategy(_ => org.apache.spark.sql.graftbridge.AsOfJoinStrategy)
+    ext.injectPlannerStrategy(_ => graft.flow.DenseFillStrategy)
   }
 }

@@ -19,13 +19,16 @@ object Verify {
     // the named prefixes. The driver never sets it, so its runs stay full.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     def wanted(name: String) = only.forall(_.exists(name.startsWith))
-    SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val attempted = SparkEntry.queries.filter(kv => wanted(kv._1))
+    val failed = attempted.toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
-    }
+    }.sorted
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -42,5 +45,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // The run's last stdout line: every failed query by name, so a caller
+    // that keeps only stdout (scripts/gate.sh) still sees each failure.
+    println(s"[verify] ${attempted.size - failed.size}/${attempted.size} queries written; " +
+      s"failed: ${if (failed.isEmpty) "none" else failed.mkString(", ")}")
   }
 }

@@ -9,43 +9,52 @@ import org.apache.spark.sql.functions._
   * The reference evaluates ~60 filters + ~60 histograms in ONE event loop
   * per sample (RDataFrame lazy multi-action model; reference
   * phaseII-analysis.py:368-510 registers everything before `:512` runs).
-  * Naive Spark would launch one job — one full scan — per histogram. Instead
-  * we encode every plot as an entry of a per-row array of
-  * `(plot, bucket, w)` structs, explode, and aggregate all plots in one
-  * `groupBy(plot, bucket)`:
+  * Naive Spark would launch one job — one full scan — per histogram.
+  * Instead, the [[DenseFill]] kernel evaluates every plot's bucket (null
+  * when its selection fails) and each selection's weight once per row,
+  * adds them into flat per-partition arrays of Σ_plots (nBins+2) slots,
+  * and emits only the nonzero slots. One `groupBy(plot, bucket)` merges
+  * the partitions:
   *
   *   - ONE scan of the sample regardless of the number of plots;
-  *   - partial (map-side) aggregation collapses each partition to at most
-  *     Σ_plots (nBins+2) rows, so the shuffle is O(plots × bins) — tiny and
-  *     independent of input size. At 100 TB the scan dominates; adding a
-  *     plot costs arithmetic, not I/O.
+  *   - no per-(event, plot) rows: the map side holds O(plots × bins)
+  *     counters, and the shuffle carries at most Σ_plots (nBins+2) rows per
+  *     partition — tiny and independent of input size. At 100 TB the scan
+  *     dominates; adding a plot costs arithmetic, not I/O.
   *
   * Output schema: (plot, bucket, n, sumw, sumw2) — bin statistics including
   * sumw2 for error propagation (reference phaseII-analysis.py:150-151).
+  * Weights are summed as doubles. `n` counts rows whose weight is null;
+  * the sums skip them, and a bucket whose weights are all null has null
+  * sums, as `sum` gives.
   */
 object HistogramPass {
 
   /** Run all plots in one scan. `df` must already carry the flag/weight
     * columns of every referenced selection (`SelectionFlow.withFlags`). */
-  def run(df: DataFrame, plots: Seq[Plot]): DataFrame = {
+  def run(df: DataFrame, plots: Seq[Plot]): DataFrame = merge(fill(df, plots, countFiles = false))
+
+  /** The per-partition fill, before the merge. With `countFiles`, each
+    * input file also gets one `(file, DenseFill.FileBucket, rows, null,
+    * null)` row (`input_file_name()` per row; "" for non-file sources). */
+  private[flow] def fill(df: DataFrame, plots: Seq[Plot], countFiles: Boolean): DataFrame = {
     require(plots.nonEmpty, "no plots registered")
     require(plots.map(_.name).distinct.size == plots.size, "duplicate plot names")
-    val leaves = plots.map(_.selection)
-    val flagged = SelectionFlow.withFlags(df, leaves)
-    val entries = plots.map { p =>
-      struct(
-        lit(p.name).as("plot"),
-        when(p.selection.flag, p.binning.bucket(p.value)).as("bucket"),
-        p.selection.weight.as("w"))
-    }
-    flagged
-      .select(explode(array(entries: _*)).as("e"))
-      .filter(col("e.bucket").isNotNull)
-      .select(col("e.plot").as("plot"), col("e.bucket").as("bucket"), col("e.w").as("w"))
-      .groupBy(col("plot"), col("bucket"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("w")).as("sumw"),
-        sum(col("w") * col("w")).as("sumw2"))
+    val flagged = SelectionFlow.withFlags(df, plots.map(_.selection))
+    val weightCols = plots.map(_.selection.weightCol).distinct
+    val layout = plots.map(p =>
+      DenseFill.Slot(p.name, p.binning.nBins, weightCols.indexOf(p.selection.weightCol)))
+    val buckets = plots.map(p => when(p.selection.flag, p.binning.bucket(p.value)).cast("int"))
+    val weights = weightCols.map(c => col(c).cast("double"))
+    if (countFiles)
+      DenseFill(flagged.withColumn("__file", input_file_name()), layout, buckets, weights,
+        Some(col("__file")))
+    else DenseFill(flagged, layout, buckets, weights, None)
   }
+
+  /** The final aggregate over fill rows: one hash exchange on
+    * (plot, bucket), carrying at most the fill's nonzero slots. */
+  private[flow] def merge(filled: DataFrame): DataFrame =
+    filled.groupBy(col("plot"), col("bucket"))
+      .agg(sum(col("n")).as("n"), sum(col("sumw")).as("sumw"), sum(col("sumw2")).as("sumw2"))
 }

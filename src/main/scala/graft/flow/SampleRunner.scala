@@ -1,7 +1,11 @@
 package graft.flow
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.{ExecutionException, Executors}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession, classic}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.core.{AnalysisConfig, SampleConfig}
 
 /** Per-sample orchestration — the Spark lifecycle twin of `bambooRun`
@@ -30,10 +34,13 @@ object SampleRunner {
     *
     * TRUE single pass (the reference's one-event-loop model, SURVEY.md §4):
     * the cutflow rides the histogram pass as one-bin pseudo-plots per
-    * selection node, so ALL histograms AND the cutflow come from one scan;
-    * the combined aggregate (O(plots × bins) rows) is written once and the
-    * two result tables are split from that tiny output. Only the per-file
-    * counter sidecar is a second (count-only, column-pruned) pass. */
+    * selection node, and the per-file event counts ride the same
+    * [[DenseFill]] kernel, so ALL histograms, the cutflow AND the counters
+    * come from one scan. `withObjects` must keep one row per event (it
+    * adds columns), since the counters count the rows it returns. The
+    * merged result is bounded — at most Σ(nBins+2) rows plus one per
+    * input file, asserted — so it is collected once, and the four result
+    * tables are written from it concurrently, in the caller's job group. */
   def runSample(
       spark: SparkSession,
       events: DataFrame,
@@ -44,27 +51,46 @@ object SampleRunner {
     val (noSel, chain) = module.selections()
     val cutflowPlots = chain.map(s =>
       Plot(CutPrefix + s.name, lit(0.5), s, EquidistantBinning(1, 0, 1)))
-    val combined = HistogramPass.run(objs, module.plots(noSel, chain) ++ cutflowPlots)
-    val allPath = s"$outDir/results/${sample.name}/all"
-    combined.write.mode("overwrite").parquet(allPath)
-    val all = spark.read.parquet(allPath)
-    all.filter(!col("plot").startsWith(CutPrefix))
-      .write.mode("overwrite").parquet(s"$outDir/results/${sample.name}/histograms")
-    all.filter(col("plot").startsWith(CutPrefix))
-      .select(
-        expr(s"substring(plot, ${CutPrefix.length + 1})").as("sel"),
-        col("n"), col("sumw"), col("sumw2"))
-      .write.mode("overwrite").parquet(s"$outDir/results/${sample.name}/cutflow")
-    // counter sidecar: per-input-file event counts (counter-merge sink)
-    events.groupBy(input_file_name().as("file"))
-      .agg(count(lit(1)).as("n_events"))
-      .write.mode("overwrite").parquet(s"$outDir/results/${sample.name}/counters")
+    val plots = module.plots(noSel, chain) ++ cutflowPlots
+    val merged = HistogramPass.merge(HistogramPass.fill(objs, plots, countFiles = true))
+    val rows = merged.collect()
+    val bound = plots.map(_.binning.nBins + 2).sum + events.inputFiles.length + 1
+    require(rows.length <= bound,
+      s"runSample: ${rows.length} result rows exceed the bound $bound (slots + files)")
+    val (fileRows, binRows) = rows.partition(_.getInt(1) == DenseFill.FileBucket)
+    val (cutRows, histRows) = binRows.partition(_.getString(0).startsWith(CutPrefix))
+    val res = s"$outDir/results/${sample.name}"
+    def frame(rs: Seq[Row], schema: StructType) =
+      spark.createDataFrame(rs.asJava, schema).coalesce(1)
+    val binSchema = merged.schema
+    val cutSchema = StructType(StructField("sel", StringType) +: binSchema.fields.toSeq.drop(2))
+    val counterSchema = new StructType().add("file", StringType).add("n_events", LongType)
+    val writes = Seq(
+      "all" -> frame(binRows.toSeq, binSchema),
+      "histograms" -> frame(histRows.toSeq, binSchema),
+      "cutflow" -> frame(cutRows.toSeq.map(r =>
+        Row(r.getString(0).substring(CutPrefix.length), r.get(2), r.get(3), r.get(4))), cutSchema),
+      "counters" -> frame(fileRows.toSeq.map(r => Row(r.getString(0), r.get(2))), counterSchema))
+    // One thread per table; withThreadLocalCaptured hands each the caller's
+    // local properties (job group, scheduler pool) and active session.
+    val pool = Executors.newFixedThreadPool(writes.size)
+    try {
+      val session = spark.asInstanceOf[classic.SparkSession]
+      writes.map { case (table, df) =>
+        SQLExecution.withThreadLocalCaptured(session, pool) {
+          df.write.mode("overwrite").parquet(s"$res/$table")
+        }
+      }.foreach { f =>
+        try f.get() catch { case e: ExecutionException => throw e.getCause }
+      }
+    } finally pool.shutdown()
   }
 
-  /** Counter source (readCounters parity): total generated events per sample. */
+  /** Counter source (readCounters parity): total generated events per
+    * sample; 0 for a sample that read no events. */
   def readCounters(spark: SparkSession, outDir: String, sample: String): Long =
     spark.read.parquet(s"$outDir/results/$sample/counters")
-      .agg(sum(col("n_events"))).head().getLong(0)
+      .agg(coalesce(sum(col("n_events")), lit(0L))).head().getLong(0)
 
   /** Results source + normalization + group stacking (postProcess parity):
     * returns per-(group, plot, bucket) stacked, lumi-normalized histograms. */

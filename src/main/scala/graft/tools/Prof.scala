@@ -88,7 +88,7 @@ object Prof {
       Dedup.minhashLshPairs(docs, 4, 5).write.mode("overwrite").format("noop").save())
 
     // widest single-pass plan: jet module (66 plots + 49-node cutflow as
-    // pseudo-plots = 115 exploded structs/row) over 20k synthetic events
+    // pseudo-plots = 115 filled plots/row) over 20k synthetic events
     {
       import graft.physics.{EventGen, JetValidationAnalysis => JVA}
       val ev = time("eventgen 20k materialize") {

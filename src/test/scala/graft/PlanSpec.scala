@@ -55,6 +55,13 @@ class PlanSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     val scans = plan.linesIterator.count(_.contains("Scan parquet"))
     assert(scans == 1, s"expected exactly 1 parquet scan for 20 plots, got $scans")
+    // map-side dense fill: no per-(row, plot) Generate, and the one
+    // exchange is the final aggregate's, keyed (plot, bucket)
+    assert(!plan.contains("Generate"), s"histogram pass plans a Generate:\n$plan")
+    val exchanges = plan.linesIterator.filter(_.contains("Exchange")).toSeq
+    assert(exchanges.size == 1 &&
+      exchanges.head.matches(""".*Exchange hashpartitioning\(plot#\d+, bucket#\d+, .*"""),
+      s"expected one Exchange hashpartitioning(plot, bucket):\n$plan")
   }
 
   test("q51: streaming-twin window agg keeps partial aggregation") {

@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.core.AnalysisConfig
 import graft.flow._
@@ -53,6 +54,54 @@ class SampleRunnerSpec extends SparkSpec {
       assert(h.filter(org.apache.spark.sql.functions.col("plot")
         .startsWith("__cutflow__")).count() == 0)
     }
+  }
+
+  test("an empty sample writes empty results and reads back zero counted events") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_empty").toString
+    val s = cfg.samples.head
+    SampleRunner.runSample(spark, EventGen.dataFrame(spark, 10).limit(0), ZMuMuAnalysis, dir, s)
+    assert(spark.read.parquet(s"$dir/results/${s.name}/histograms").count() == 0)
+    assert(spark.read.parquet(s"$dir/results/${s.name}/cutflow").count() == 0)
+    assert(SampleRunner.readCounters(spark, dir, s.name) == 0L)
+  }
+
+  /** One runSample over 600 events read from Parquet, in the job group
+    * "runSample-spec": the groups of every job it submitted, and the input
+    * records its stages read. */
+  private lazy val traced: (Seq[String], Long) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_traced").toString
+    EventGen.dataFrame(spark, 600).write.parquet(s"$dir/events")
+    val sc = spark.sparkContext
+    val groups = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val records = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("<none>"))
+      }
+      override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        records.addAndGet(e.stageInfo.taskMetrics.inputMetrics.recordsRead)
+    }
+    val events = spark.read.parquet(s"$dir/events")
+    org.apache.spark.graft.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup("runSample-spec", "runSample job group pin")
+    try SampleRunner.runSample(spark, events, ZMuMuAnalysis, s"$dir/out", cfg.samples.head)
+    finally sc.clearJobGroup()
+    org.apache.spark.graft.ListenerBusDrain(sc)
+    sc.removeSparkListener(listener)
+    assert(jobs.get() >= 5, s"expected the pass and four writes, saw ${jobs.get()} jobs")
+    (groups.asScala.toSeq, records.get())
+  }
+
+  test("runSample reads each event once: histograms, cutflow and counters share one scan") {
+    assert(traced._2 == 600L, s"stages read ${traced._2} input records for 600 events")
+  }
+
+  test("every job runSample submits carries the caller's job group, concurrent writes included") {
+    assert(traced._1 == Seq("runSample-spec"), s"job groups seen: ${traced._1}")
   }
 
   test("postProcess stacks normalized histograms per group") {
