@@ -6,7 +6,7 @@
 # UTC, UI off, SPARK_DRIVER_MEM). Compile first (`sbt -batch compile`),
 # and do NOT recompile while a probe JVM is mid-run — lazy classloading
 # reads the class files being rewritten.
-#   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 scripts/probe.sh graft.tools.AnnScale
+#   SPARK_GRAFT_SF_DIR=<sfDir> scripts/probe.sh graft.tools.ProfQuery <query> [iters]
 set -euo pipefail
 cd "$(dirname "$0")/.."
 CLS="$1"; shift || true
@@ -15,4 +15,4 @@ FLAGS=""
 for p in $OPENS; do FLAGS="$FLAGS --add-opens $p=ALL-UNNAMED"; done
 exec java $FLAGS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$CLS" "$@"
+  -cp "target/scala-2.13/classes:${SPARK_HOME:-/opt/spark}/jars/*" "$CLS" "$@"

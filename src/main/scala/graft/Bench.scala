@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): times the headline queries over
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -13,16 +11,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.core.SessionTuning.local("graft-bench", cpus)
 
     val headline = SparkEntry.allDefs.filter(_.headline)
     // JVM + codegen warmup on the cheapest headline query (untimed).
@@ -54,18 +44,8 @@ object Bench {
     // diagnosing: load >> allotted CPUs means foreign processes were
     // competing for the vCPUs during the measurement.
     def load1: Double = graft.tools.HostLoad.load1
-    // Hypervisor steal (r12): load1 only sees THIS guest's runnable
-    // queue — a noisy hypervisor neighbor slows every query uniformly
-    // while load1 stays clean (measured: a ~2× whole-bench inflation at
-    // load1 ≈ 1 with /proc/stat steal ticking 1-3% even at idle). Sample
-    // the steal/total jiffy counters around each iteration so the
-    // artifact carries the multiplier's OTHER channel too. The sampler
-    // is shared with the probe harness (HostLoad, r13) and sums only
-    // fields user..steal — the raw line sum double-counted guest jiffies
-    // and deflated steal% (r12 ADVICE).
-    def cpuJiffies(): (Long, Long) = graft.tools.HostLoad.cpuJiffies()
     val loadStart = load1
-    val loadGate = 1.5 * cpus.toInt
+    val loadGate = 1.5 * cpus
     // Block-hygiene probe (r8 finding 1): live persistent RDDs and their
     // block-manager bytes after each query. With the iterative loops
     // releasing superseded rounds this must stay flat across the bench —
@@ -97,15 +77,14 @@ object Bench {
       var converged = false
       while (attempts < maxAttempts && !converged) {
         attempts += 1
-        val pre = load1
-        val j0 = cpuJiffies()
-        val t0 = System.nanoTime()
         try {
-          q.build(spark, sfDir).write.mode("overwrite").format("noop").save()
-          val j1 = cpuJiffies()
-          val stealPct =
-            100.0 * (j1._1 - j0._1).max(0L) / (j1._2 - j0._2).max(1L)
-          times += (((System.nanoTime() - t0) / 1e9, pre, stealPct))
+          // load1 sees only THIS guest's run queue; steal% catches a noisy
+          // hypervisor neighbor (r12: ~2× whole-bench inflation at load1 ≈ 1
+          // with steal 1-3%). HostLoad.measured samples both around the body.
+          val (_, secs, pre, stealPct) = graft.tools.HostLoad.measured {
+            q.build(spark, sfDir).write.mode("overwrite").format("noop").save()
+          }
+          times += ((secs, pre, stealPct))
           if (pre <= loadGate) clean += 1
           else System.err.println(
             f"[bench] ${q.name} iter $attempts contended (load1 $pre%.1f > $loadGate%.1f) — re-running")

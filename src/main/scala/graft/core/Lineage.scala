@@ -44,7 +44,8 @@ object Lineage {
   /** [[cut]] with the partitioning RE-ASSERTED on the checkpoint (r14).
     *
     * Under AQE, Dataset.checkpoint/localCheckpoint records
-    * `UnknownPartitioning` (measured, `graft.tools.CutPartProbe`), so a
+    * `UnknownPartitioning` (measured by `CutPartProbe` at 94bd464;
+    * CheckpointPartitioningSpec pins it), so a
     * "hash-partitioned checkpoint" consumed by same-keyed joins/aggregates
     * silently re-exchanges EVERY round — the per-round E-sized shuffle
     * the pre-cut repartition was believed to have removed. This spelling

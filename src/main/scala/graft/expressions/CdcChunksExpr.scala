@@ -9,7 +9,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Content-defined chunking of a token array in ONE per-row pass — the
-  * codegen replacement for [[graft.operators.Dedup.cdcChunksWindowed]]'s
+  * codegen replacement for the windowed spelling's (the test twin
+  * `OperatorTwins.cdcChunksWindowed`)
   * explode → full-corpus window (exchange + (doc, pos) sort) →
   * collect_list/array_sort/transform regroup (r13, guide §2.4: the window
   * and the regroup exist only to reassemble what the row already had —

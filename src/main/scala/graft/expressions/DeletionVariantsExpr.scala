@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** SymSpell ≤-d deletion neighborhood of a string — the codegen
   * replacement for the HOF spelling in
-  * [[graft.operators.Fuzzy.deletionVariantsHof]] (a `transform` +
+  * `OperatorTwins.deletionVariantsHof` (test scope; a `transform` +
   * `flatten(transform(transform))` + `array_distinct` chain, every layer
   * CodegenFallback: interpreted lambda dispatch and one boxed Catalyst
   * array per layer per row — and, because the fallback poisons the whole

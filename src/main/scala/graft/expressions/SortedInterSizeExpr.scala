@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
   * types only — over strings they fall back to an interpreted
   * `SQLOpenHashSet` build per evaluation (two hash sets and boxed probes
   * per pair for intersect + union). Verification joins evaluate Jaccard at
-  * PAIR cardinality — 11M pairs at the NearDupScale 64× rung — where the
+  * PAIR cardinality — 11M pairs at the 64× rung of NearDupScale (at 94bd464) — where the
   * interpreted spelling measured ~25 µs/pair and dominated both verify
   * tiers (SCALING.md §R11). A shingle set is sorted once per DOCUMENT
   * (corpus-proportional `array_sort`), then every pair evaluation is a

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * ([[graft.operators.Dedup.prefixJaccardPairs]]).
   *
   * Why longs and not the string kernel: the r12 tier measurement
-  * (Prof104BL, SCALING §R12) showed the candidate-cardinality stage is
+  * (Prof104BL at 94bd464, SCALING §R12) showed the candidate-cardinality stage is
   * memory-traffic-bound — each string-merge evaluation pulls two ~2 KB
   * UTF8 arrays and allocates a UTF8String per element, ~20-25 µs/pair at
   * 176M candidate pairs. The count-filter bound needs only HASH

@@ -662,7 +662,7 @@ object Curation {
     * per-source running sum is a census-sized window, and docs join their
     * percentile back on (source, quality) — a composite key AQE can
     * skew-split, unlike a window partition (witnessed r13,
-    * RankCalibScale: one planted source holding half a 320k-doc corpus —
+    * RankCalibScale at 94bd464: one planted source holding half a 320k-doc corpus —
     * see SCALING §R13 for the task census in both the broadcast join-back
     * and the forced-SMJ form). percent_rank = (rank−1)/(n−1) with
     * rank = n_< + 1 = cum − c + 1, cume_dist = cum/n — divisions of

@@ -139,7 +139,7 @@ object Dedup {
     * size): each candidate pair carries BOTH full shingle arrays through a
     * shuffle join, and in a duplicate-heavy regime true pairs grow
     * quadratically in the duplication factor — the 64× identical-copy
-    * probe (AnnScale) died DISK-FULL from ~hundreds of GB of sort-merge
+    * probe (AnnScale at 94bd464) died DISK-FULL from ~hundreds of GB of sort-merge
     * spill (11.1M pairs × two full arrays), while 16× completed in 85 s.
     * After the collapse the array-carrying joins see only REPRESENTATIVE
     * pairs (invariant in the duplication factor); member pairs are
@@ -176,7 +176,7 @@ object Dedup {
     * remains the cheaper choice when a [[bandingFor]]-sized miss budget
     * is acceptable (16 buckets/doc vs prefix's ≈ (1−t)·n + 1). The
     * default tier remains the low-replication choice at sparse pair
-    * densities; both tiers anchor the recall ladders (BandingScale) and
+    * densities; both tiers anchor the recall ladders (BandingScale at 94bd464) and
     * the LSH equality specs. r13 closure: the bucket-local tier
     * COMPLETES the 256× rung the default dies on — 1,982.7 s, disk
     * transient 46 GB fully drained, 178,676,206 pairs — a strict
@@ -259,7 +259,7 @@ object Dedup {
     // The plain prefix×prefix join is lossless but, in the honest near-dup
     // regime (every doc has textually DISTINCT near-twins), barely
     // selective: twins share their rare shingles, so EVERY moderately
-    // similar base pair fans into r² candidates — NearDupScale measured
+    // similar base pair fans into r² candidates — NearDupScale (at 94bd464) measured
     // 11.06M candidates for 656k verified pairs at 16× (94% rejects), and
     // at 64× the 176M candidates each carrying two full string arrays
     // through the verification exchanges spilled past the disk watchdog
@@ -384,7 +384,7 @@ object Dedup {
     * operator's contract is exactness — boilerplate-cluster regimes that
     * need shedding belong to [[minhashLshPairs]]'s capped tiers.
     *
-    * MEGA-FAMILY BOUNDARY (measured r13, NearDupScale q104blmega): a
+    * MEGA-FAMILY BOUNDARY (measured r13, NearDupScale q104blmega at 94bd464): a
     * 10k-member DISTINCT-text near-identical family (byte-identical
     * families are absorbed by the identity collapse; distinct variants —
     * boilerplate with per-page noise — are not) COMPLETES, disk-flat,
@@ -422,7 +422,7 @@ object Dedup {
       .isFirstShared(col("a.ph"), col("b.ph"), col("a.hk"))
     // The Jaccard threshold lives in a PROJECTION + blocked filter ABOVE
     // the join, NOT in the join condition — the r11 conjunct rule, refined
-    // by this tier's own measurement (Prof104BL, SCALING §R12): SMJ codegen
+    // by this tier's own measurement (Prof104BL at 94bd464, SCALING §R12): SMJ codegen
     // splits variable extraction by condition — columns the CONDITION
     // references are extracted for EVERY key-matched combo (Σ occ², 19.6G
     // at the 256× rung), columns only the OUTPUT references are extracted
@@ -598,7 +598,7 @@ object Dedup {
 
   /** Histogram of (band, sig) bucket occupancies over the distinct-text
     * corpus — the sizing probe behind the q224b capped gate's `maxBucket`
-    * (see [[graft.tools.BucketOccupancy]]): identity collapse first, so
+    * (see BucketOccupancy at 94bd464): identity collapse first, so
     * occupancy counts REPS exactly as [[capBuckets]] sees them. */
   def bucketOccupancyHistogram(docs: DataFrame): DataFrame = {
     val par = docs.sparkSession.sparkContext.defaultParallelism
@@ -622,7 +622,7 @@ object Dedup {
     * each pair to BOTH docs' shingle arrays — two array-carrying shuffles
     * whose volume is ∝ verified pairs × doc size. Once true pairs alone
     * reach ~10⁸ (dense near-dup regimes: 256 distinct twins per doc ⇒
-    * ~163M pairs on the NearDupScale corpus) that shuffle is back at the
+    * ~163M pairs on the NearDupScale corpus, at 94bd464) that shuffle is back at the
     * disk wall NO MATTER how good the candidate filter is — the cost is
     * output-proportional. This tier changes the shuffle SHAPE instead:
     * each doc's shingle set is replicated into its band buckets — ONE
@@ -665,7 +665,7 @@ object Dedup {
     // per-doc band-signature array + survival BITMASK (bit b ⇔ the doc's
     // band-b bucket survived the cap). Flat longs, not (sig, ok) structs:
     // the exactly-once check below runs once per JOINED row (Σ occ² — 161M
-    // at the NearDupScale 64× rung), so its operands must be readable
+    // at the 64× rung of NearDupScale, at 94bd464), so its operands must be readable
     // without per-row allocation. Uncapped every bucket survives (no
     // census); capped (r12 directive 1 — the q89 hot-key rule) the shed
     // buckets come from a groupBy (band, sig) partial-agg census, NEVER a
@@ -887,7 +887,7 @@ object Dedup {
     // collapse cannot shrink them) — a forced broadcast there is the q46
     // broadcast-OOM wearing its original hat. AQE sees the runtime size
     // and still broadcasts when the frame is actually small (PlanSpec pins
-    // the gate-scale BroadcastHashJoin; the NearDupScale probe shows the
+    // the gate-scale BroadcastHashJoin; the NearDupScale probe (at 94bd464) showed the
     // same code picking a shuffle join when pairs grow with the corpus).
     val sh = repDocs.join(candIds, Seq("doc_id"), "left_semi")
       // sorted at the DOC projection so each pair evaluation below is the
@@ -960,7 +960,7 @@ object Dedup {
     * instead of ∝ verified pairs × doc size. Choose it when expected true
     * pairs ≳ 2 × corpus × bands; below that the default tier's
     * candidate-bounded shingling reads less data. That crossover is
-    * MEASURED (NearDupScale honest-twin ladder, SCALING.md §R11):
+    * MEASURED (NearDupScale honest-twin ladder at 94bd464, SCALING.md §R11):
     * through pairs ≈ 2 × corpus×bands the tiers stay within ~1.7× of
     * each other (regime- and JIT-dependent at probe scale); at ≈ 4×
     * bucket-local is 3.3× faster; at ≈ 9× (178.7M pairs — past the ~10⁸
@@ -1302,8 +1302,8 @@ object Dedup {
     * generator-guard rule: a plain posexplode would push an implicit
     * non-empty guard on the EXPENSIVE chunk expression into the scan and
     * evaluate it per input row; empty/null token arrays yield no rows
-    * either way, so the frames are identical ([[cdcChunksWindowed]] is
-    * the spec-pinned reference twin). cid is the 0-based chunk index
+    * either way, so the frames are identical (the test twin
+    * `OperatorTwins.cdcChunksWindowed` is the spec-pinned reference). cid is the 0-based chunk index
     * (cast long, the windowed sum's type); no consumer reads its VALUE —
     * q133 groups it away and q136 takes distinct (doc_id, chunk). */
   private[graft] def cdcChunks(docs: DataFrame, modulus: Int): DataFrame = {
@@ -1313,24 +1313,6 @@ object Dedup {
           TextOps.tokens(col("text")), modulus)).as(Seq("cid", "chunk")))
       .filter(col("chunk").isNotNull)
       .select(col("doc_id"), col("cid").cast("long").as("cid"), col("chunk"))
-  }
-
-  /** The r1–r12 windowed spelling of [[cdcChunks]] — kept as the
-    * cross-check reference twin for the native expression (DedupSpec pins
-    * chunk-set equality per doc; cid is a per-doc running index in both,
-    * off by the first token's boundary flag, which no consumer reads). */
-  private[graft] def cdcChunksWindowed(docs: DataFrame, modulus: Int): DataFrame = {
-    require(modulus >= 2, s"bad cdc modulus $modulus")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("pos"))
-    val bnd = (conv(substring(md5(col("tok")), 1, 8), 16, 10).cast("long")
-      % modulus === 0).cast("int")
-    docs.select(col("doc_id"), posexplode(TextOps.tokens(col("text"))).as(Seq("pos", "tok")))
-      .withColumn("cid", sum(bnd).over(w))
-      .groupBy(col("doc_id"), col("cid"))
-      .agg(concat_ws(" ", transform(
-        array_sort(collect_list(struct(col("pos"), col("tok")))),
-        t => t.getField("tok"))).as("chunk"))
   }
 
   /** Containment near-dup — the asymmetric case Jaccard structurally
@@ -1909,8 +1891,8 @@ object Dedup {
       // NOT headline: this is the DENSE-regime tier — at the bench's
       // sparse 1× scale its corpus × prefix replication is pure overhead
       // (~8-20 s against the default tier's 3 s), so benching it would
-      // measure the wrong regime; NearDupScale's honest ladder is its
-      // performance instrument (SCALING §R12).
+      // measure the wrong regime; NearDupScale's honest ladder (at 94bd464)
+      // was its performance instrument (SCALING §R12).
       headline = false,
       oracle = Some("""WITH s AS (
              |  SELECT doc_id,
@@ -2065,7 +2047,7 @@ object Dedup {
     // 6 > cap 4). The DuckDB oracle replays the shed EXACTLY because the
     // cap can only bind through identity groups here: maxBucket = 4 sits
     // strictly above the fixture's max distinct-text bucket occupancy
-    // (bucketOccupancyHistogram / tools.BucketOccupancy — occupancy tops
+    // (bucketOccupancyHistogram / BucketOccupancy at 94bd464 — occupancy tops
     // out at the ≤3-member near-dup components; DedupSpec "q224b fixture
     // assumption" PINS that margin on the live sf0.01 fixture, so a
     // testdata regeneration that densifies near-dups fails with a named

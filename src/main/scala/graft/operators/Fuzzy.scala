@@ -38,35 +38,15 @@ object Fuzzy {
 
   /** All strings obtainable from `s` by deleting at most `d` characters
     * (d ∈ {1, 2}), the string itself included, distinct. Native codegen
-    * since r13: the HOF spelling below is CodegenFallback at every layer
+    * since r13: the HOF spelling is CodegenFallback at every layer
     * (interpreted lambdas + a boxed array per layer per key) AND evicts
     * its enclosing operator from whole-stage codegen — measured ~600 µs
     * vs ~4 µs per 24-char key on the q110b variant stage. The HOF form is
-    * kept as the independent reference; FuzzySpec pins native ≡ HOF,
+    * kept as the independent reference in test scope
+    * (`OperatorTwins.deletionVariantsHof`); FuzzySpec pins native ≡ HOF,
     * element order included. */
   def deletionVariants(s: Column, d: Int): Column =
     graft.expressions.DeletionVariantsExpr.deletionVariants(s, d)
-
-  /** Reference HOF spelling (pre-r13 production form) — spec twin only.
-    * Empty-range `sequence` guards matter: `sequence(1, 0)` counts DOWN,
-    * not empty. */
-  private[graft] def deletionVariantsHof(s: Column, d: Int): Column = {
-    require(d >= 1 && d <= 2, s"supported d in {1,2}, got $d")
-    val len = length(s)
-    val none = array().cast("array<string>")
-    val v1 = transform(sequence(lit(1), len), i =>
-      concat(s.substr(lit(1), i - 1), s.substr(i + 1, len)))
-    val v2 =
-      if (d < 2) none
-      else flatten(transform(sequence(lit(1), len - 1), i =>
-        transform(sequence(i + 1, len), j =>
-          concat(s.substr(lit(1), i - 1),
-            s.substr(i + 1, j - i - 1),
-            s.substr(j + 1, len)))))
-    array_distinct(concat(array(s),
-      when(len >= 1, v1).otherwise(none),
-      when(len >= 2 && lit(d >= 2), v2).otherwise(none)))
-  }
 
   /** Self-join: all (a_id, b_id, dist) with lev ≤ `maxDist` over
     * `docs(idCol, keyCol)`. Short keys only by contract (see object doc).
@@ -93,7 +73,7 @@ object Fuzzy {
     // construction applied to the join key: byte-identical keys generate
     // ONE deletion neighborhood, so an identical-key class of B rows costs
     // B (mapping rows), not B × neighborhood variants and not B² candidate
-    // rows per shared variant — FuzzyScale's 64× identical-copy probe ran
+    // rows per shared variant — the 64× identical-copy probe FuzzyScale (at 94bd464) ran
     // the pre-collapse shape for 1,477 s, quadratic in the duplication
     // factor, before the fix. Member pairs come back through narrow id
     // joins; same-key pairs have lev = 0 by construction. The key
@@ -258,7 +238,7 @@ object Fuzzy {
     // ---- q110b: bench twin — the PRODUCTION pipeline, uncapped corpus ------
     // What a 100 TB run actually executes: exact dedup first (identical
     // titles collapse to their min-id representative, the documented
-    // mitigation for the all-duplicates regime FuzzyScale measured), then
+    // mitigation for the all-duplicates regime FuzzyScale (at 94bd464) measured), then
     // the deletion-variant join with the hot-key cap engaged. gate = false:
     // q110's brute-force oracle already certifies the candidate generation
     // lossless; this entry exists so the full-corpus cost is timed at

@@ -75,7 +75,7 @@ object Graph {
     // (dst, contribution) partial-agg exchange — the single
     // co-partitioned shuffle the scaladoc contract promises.
     // the trans checkpoint CARRIES hash(src) (r14, recutPartitioned):
-    // under AQE a plain cut records UnknownPartitioning (CutPartProbe),
+    // under AQE a plain cut records UnknownPartitioning (CutPartProbe at 94bd464),
     // so the round's contribution join was silently re-shuffling the
     // E-sized trans table EVERY round — the exact cost this checkpoint
     // exists to pay once. The probe cut materializes through the

@@ -72,7 +72,7 @@ object RelationalExt {
     // (okey, pk) — noise against a full-width pair stage.
     val par = lineitem.sparkSession.sparkContext.defaultParallelism
     // cutPreShuffled (r14): the okey partitioning does NOT survive a plain
-    // AQE checkpoint (CutPartProbe — the r14-part-I comment above claimed
+    // AQE checkpoint (CutPartProbe at 94bd464 — the r14-part-I comment above claimed
     // it did; the pair join was re-exchanging both sides post-cut), so the
     // hash(okey, par) layout the numbered repartition established is
     // re-asserted on the cut — the pair self-join and the basket censuses
@@ -567,7 +567,7 @@ object RelationalExt {
     // ---- q23: exact interpolated percentiles -------------------------------
     // Both engines implement the continuous (type-7) quantile: order
     // statistics + linear interpolation on identical doubles — exact parity.
-    // (Measured alternative, tools/P23: a windowed-rank interpolation looks
+    // (Measured alternative, P23 at 94bd464: a windowed-rank interpolation looks
     // 2× faster on a COLD table read but is 1.8× slower in bench context —
     // the hashmap `percentile` aggregate wins once the scan is warm; kept.)
     QueryDef(

@@ -272,7 +272,8 @@ object Similarity {
     * q145 CTE-inline hazard). Values are unchanged — same d2
     * quantization, same argmin order, same round(avg(·), 6) centroid
     * math; SimilaritySpec pins driver ≡ distributed equality against
-    * [[kmeansFitDistributed]] on the gate corpus plus edge frames (null
+    * the test twin `OperatorTwins.kmeansFitDistributed` on the gate corpus
+    * plus edge frames (null
     * vectors, NaN elements, ties, empty clusters).
     * Contracts: ids 0..k−1 present with non-null fixed-width vectors
     * (as before — init seeds from them); callers that discard the
@@ -386,42 +387,6 @@ object Similarity {
       base.select(col("vec_id"), bestCentroid(col("v"), cents).as("b"), col("v"))
         .select(col("vec_id"), col("b.cluster").as("cluster"), col("v"),
           col("b.d2").as("d2"))
-
-  /** The r13 distributed Lloyd spelling, kept as the REFERENCE TWIN for
-    * the driver-paced rewrite above — SimilaritySpec pins centroid and
-    * assignment equality on the gate corpus and constructed edge frames.
-    * Broadcast cents → corpus×k crossJoin → min-struct argmin per vec_id
-    * (riding the base exchange) → posexplode → (cluster, pos) avg →
-    * (cluster) reassembly, unrolled lazily across rounds. */
-  private[graft] def kmeansFitDistributed(embs: DataFrame, k: Int,
-      iters: Int, vecCol: String, idCol: String): (DataFrame, DataFrame) = {
-    val base = embs.select(col(idCol).as("vec_id"),
-      col(vecCol).cast("array<double>").as("v"))
-      .repartition(embs.sparkSession.sparkContext.defaultParallelism,
-        col("vec_id"))
-    val d2 = VectorOps.l2sq(col("v"), col("c")) // native fused loop, bit-equal to the HOF fold
-    val d2q = floor(d2 * lit(1e6) + lit(0.5)) / lit(1e6)
-    def assign(cents: DataFrame): DataFrame =
-      base.crossJoin(broadcast(cents))
-        .select(col("vec_id"), col("cluster"), col("v"), d2q.as("d2"))
-        .groupBy(col("vec_id"))
-        .agg(min(struct(col("d2"), col("cluster"))).as("b"),
-          first(col("v")).as("v"))
-        .select(col("vec_id"), col("b.cluster").as("cluster"), col("v"),
-          col("b.d2").as("d2"))
-    def update(assigned: DataFrame): DataFrame =
-      assigned
-        .select(col("cluster"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy(col("cluster"), col("pos"))
-        .agg(round(avg(col("x")), 6).as("m"))
-        .groupBy(col("cluster"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-          t => t.getField("m")).as("c"))
-    var cents = base.filter(col("vec_id") < k)
-      .select(col("vec_id").as("cluster"), col("v").as("c"))
-    for (_ <- 1 to iters) cents = update(assign(cents))
-    (cents, assign(cents)) // (vec_id, cluster, v, d2) under the final centroids
-  }
 
   /** Johnson–Lindenstrauss random projection: reduce `array<float>`
     * embeddings to `signs.length` dimensions via literal Rademacher (±1)
@@ -563,7 +528,8 @@ object Similarity {
     * Values: same centered products, same round(Σ/n, 6) — partial-sum
     * order is the round-6-absorbed class (the oracle replays the census
     * with DuckDB's own order). SimilaritySpec pins equality against the
-    * retained join spelling on the gate corpus. EAGER like the PCA rounds
+    * join spelling (test twin `OperatorTwins.covarianceCensusJoin`) on the
+    * gate corpus. EAGER like the PCA rounds
     * (the q145/q162 plan-audit contract): the census collects at
     * frame-construction time and re-enters as a literal table. */
   private[graft] def covarianceCensus(embs: DataFrame): DataFrame = {
@@ -600,30 +566,6 @@ object Similarity {
     cells.toDF("i", "j", "c")
   }
 
-  /** The r13 join spelling of [[covarianceCensus]] — exploded frame cut +
-    * broadcast-centered d²-fan self-join — kept as the spec-pinned
-    * reference twin (SimilaritySpec pins census equality on the gate
-    * corpus) and as the shape a deployment would profile against. */
-  private[graft] def covarianceCensusJoin(embs: DataFrame): DataFrame = {
-    import graft.core.Lineage.CutOps
-    val xp = embs.select(col("vec_id"),
-      posexplode(col("embedding").cast("array<double>")).as(Seq("pos", "x")))
-      .cutLineage()
-    val mstats = xp.groupBy(col("pos"))
-      .agg(round(avg(col("x")), 6).as("m"), count(lit(1)).as("cnt"))
-    // the census divisor, read off the 64-row mean census (no extra scan)
-    val n = mstats.agg(max(col("cnt"))).head().getLong(0).toDouble
-    val means = mstats.select(col("pos"), col("m"))
-    val cent = xp.join(broadcast(means), "pos")
-      .select(col("vec_id"), col("pos"), (col("x") - col("m")).as("xc"))
-    val census = cent.as("a").join(cent.as("b"), col("a.vec_id") === col("b.vec_id"))
-      .groupBy(col("a.pos").as("i"), col("b.pos").as("j"))
-      .agg(round(sum(col("a.xc") * col("b.xc")) / lit(n), 6).as("c"))
-      .cutLineage()
-    Lineage.release(xp) // census is materialized — the exploded frame is dead
-    census
-  }
-
   /** Spark's `round(col, 6)` on DoubleType, replicated for the driver-side
     * power rounds: identity on NaN/±Inf, else decimal HALF_UP on the
     * double's canonical decimal form (what `BigDecimal(double)` builds) —
@@ -650,7 +592,7 @@ object Similarity {
     (poss, m)
   }
 
-  /** Driver twin of [[powerRounds]]: `iters` rounds of
+  /** Driver twin of `OperatorTwins.powerRounds` (test scope): `iters` rounds of
     * v ← round(normalize(C·v), 6) from the 0.125 seed, mirroring the
     * distributed dag's expression shapes ((c*w) products summed, u/nm
     * rounded) — summation ORDER is ascending-j, a reordering the same
@@ -675,7 +617,8 @@ object Similarity {
     w
   }
 
-  /** Driver twin of [[rayleigh]]: round(Σ (c·w_i)·w_j, 6). */
+  /** Driver twin of `OperatorTwins.rayleigh` (test scope):
+    * round(Σ (c·w_i)·w_j, 6). */
   private[graft] def rayleighDriver(m: Array[Array[Double]], w: Array[Double]): Double = {
     var s = 0.0
     var i = 0
@@ -686,36 +629,6 @@ object Similarity {
     }
     r6(s)
   }
-
-  /** `iters` rounds of v ← round(normalize(C·v), 6) from the constant
-    * seed, lineage-cut per round — the replayable power-iteration core.
-    * Distributed spelling, kept as the spec-pinned reference twin of
-    * [[powerRoundsDriver]] (and the shape a deployment with d large
-    * enough that d² stops being driver-safe would revert to). */
-  private[graft] def powerRounds(cov: DataFrame, iters: Int): DataFrame = {
-    import graft.core.Lineage.CutOps
-    var v = cov.filter(col("i") === col("j"))
-      .select(col("i").as("pos"), lit(0.125).as("w"))
-    for (_ <- 1 to iters) {
-      val prev = v
-      val u = cov
-        .join(v.select(col("pos").as("j"), col("w")), "j")
-        .groupBy(col("i").as("pos")).agg(sum(col("c") * col("w")).as("u"))
-      val nm = u.agg(sqrt(sum(col("u") * col("u"))).as("nm"))
-      v = u.crossJoin(broadcast(nm))
-        .select(col("pos"), round(col("u") / col("nm"), 6).as("w"))
-        .cutLineage()
-      graft.core.Lineage.release(prev) // round i−1's 64-row block is dead
-    }
-    v
-  }
-
-  /** Rayleigh quotient round(vᵀCv, 6) as a one-row frame — distributed
-    * reference twin of [[rayleighDriver]] (spec-pinned). */
-  private[graft] def rayleigh(cov: DataFrame, v: DataFrame): DataFrame = cov
-    .join(v.select(col("pos").as("i"), col("w").as("wi")), "i")
-    .join(v.select(col("pos").as("j"), col("w").as("wj")), "j")
-    .agg(round(sum(col("c") * col("wi") * col("wj")), 6).as("eigval"))
 
   def pcaPower(embs: DataFrame, iters: Int = 8): DataFrame = {
     val spark = embs.sparkSession
@@ -845,7 +758,7 @@ object Similarity {
     // between components; the generated oracle replays the full spectrum.
     // EAGER BUILD (r13): pcaTopK collects the covariance census and runs
     // the power rounds as driver arithmetic at FRAME-CONSTRUCTION time —
-    // plan tooling (PlanDump/PlanAudit) on this entry therefore executes
+    // plan tooling (PlanDump, with or without --exec) on this entry therefore executes
     // the census pipeline when it builds the frame, and the plan it then
     // prints is a local relation (the census/join shape is pinned by
     // SimilaritySpec's driver≡distributed parity suite, not by plan reads).

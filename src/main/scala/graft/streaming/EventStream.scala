@@ -305,7 +305,7 @@ object EventStream {
     * layout stays `bucket=N/`, so [[probedNeighborAlerts]] needs no
     * changes (StreamingSpec pins alert parity at salt > 1).
     *
-    * SIZING (measured r13, BucketSaltScale: 2.12M distinct vectors, 94%
+    * SIZING (measured r13, BucketSaltScale at 94bd464: 2.12M distinct vectors, 94%
     * in one bucket): at salt = 1 the write wall IS the hot bucket's
     * single task (17.1 s of a 20.1 s wall — one file, one thread, however
     * many executors the cluster has); at salt = 16 the same index writes

@@ -1,12 +1,12 @@
 package graft.tools
 
-/** Shared host-contention instrument for the bench and every scale probe
-  * (r13 directive 2: single-run probe rungs inherited the host ambiguity
-  * the bench escaped in r12 — the ~1.6–2× hypervisor throttle that
-  * contaminated every absolute number that round was only diagnosable
-  * because `Bench` sampled steal per iteration; probes printed stage
-  * censuses but neither contention channel, so their rungs could not be
-  * adjudicated host-vs-code after the fact).
+/** Shared host-contention instrument for `Bench`, `ProfQuery` and the
+  * perfbench harness (r13 directive 2: single-run probe rungs inherited
+  * the host ambiguity the bench escaped in r12 — the ~1.6–2× hypervisor
+  * throttle that contaminated every absolute number that round was only
+  * diagnosable because `Bench` sampled steal per iteration; probes printed
+  * stage censuses but neither contention channel, so their rungs could
+  * not be adjudicated host-vs-code after the fact).
   *
   * Two channels, because they see DIFFERENT contention:
   *  - `load1` — THIS guest's 1-min runnable queue: foreign processes in
@@ -19,8 +19,7 @@ package graft.tools
   * The total-jiffy denominator sums ONLY fields 1–8 (user..steal): on
   * Linux, guest/guest_nice (fields 9–10) are already folded into
   * user/nice, so including them double-counts guest time and deflates
-  * steal% on guest-running hosts (r12 ADVICE finding — `Bench` now
-  * delegates here).
+  * steal% on guest-running hosts (r12 ADVICE finding).
   */
 object HostLoad {
 
@@ -50,16 +49,5 @@ object HostLoad {
     val j1 = cpuJiffies()
     val steal = 100.0 * (j1._1 - j0._1).max(0L) / (j1._2 - j0._2).max(1L)
     (r, secs, pre, steal)
-  }
-
-  /** The per-rung suffix every probe row carries in SCALING §R13+. */
-  def fmt(secs: Double, l1: Double, stealPct: Double): String =
-    f"$secs%.1f s (load1 $l1%.2f, steal $stealPct%.2f%%)"
-
-  /** Convenience: time the body and print "label: …s (load1 …, steal …)". */
-  def timed[T](label: String)(body: => T): T = {
-    val (r, secs, l1, st) = measured(body)
-    println(s"$label: ${fmt(secs, l1, st)}")
-    r
   }
 }

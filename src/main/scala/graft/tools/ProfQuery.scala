@@ -1,11 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev profiler (r13): run ONE headline/gate query under the bench's
-  * session shape with a per-stage task census — (tasks, mean, max, total
-  * task-time) for the top stages by total task time — so a slow bench row
-  * decomposes into "which stage, straggler or uniform" without the UI.
+/** Dev profiler (r13/r14): run ONE headline/gate query `iters` times under
+  * the bench's session. Each iteration prints one line that splits the
+  * wall time into driver-side phases — frame construction (build),
+  * analysis+optimization+physical planning (plan) and execution (run) —
+  * with the job count and both host-contention channels, so an
+  * orchestration-bound row (task time ≪ wall, the r14 profile signature)
+  * separates "Catalyst is slow on this dag" from "stage scheduling is the
+  * wall". Below it, a per-stage task census — (tasks, mean, max, total
+  * task-time) for the top stages by total task time — shows which stage
+  * dominates, straggler or uniform, without the UI.
   *
   * Usage: scripts/probe.sh graft.tools.ProfQuery <name> [iters]
   */
@@ -14,21 +18,17 @@ object ProfQuery {
     val name = args(0)
     val iters = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.core.SessionTuning.local("graft-profquery", cpus)
     // stageId -> (tasks, total ms, max ms, shuffle-read B, shuffle-write B, input B)
     val stageStats = new java.util.concurrent.ConcurrentHashMap[
       Int, (Long, Long, Long, Long, Long, Long)]()
     val stageOps =
       new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
       override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
         val d = if (t.taskInfo != null) t.taskInfo.duration else 0L
         val m = t.taskMetrics
@@ -52,10 +52,19 @@ object ProfQuery {
       .getOrElse(sys.error(s"no such query: $name"))
     (1 to iters).foreach { i =>
       stageStats.clear()
-      val (_, secs, l1, steal) = HostLoad.measured {
-        q.build(spark, sfDir).write.mode("overwrite").format("noop").save()
+      jobs.set(0)
+      val ((build, plan), secs, l1, steal) = HostLoad.measured {
+        val t0 = System.nanoTime()
+        val df = q.build(spark, sfDir)
+        val t1 = System.nanoTime()
+        // forces analysis, optimization and physical planning (NOT execution)
+        df.queryExecution.executedPlan
+        val t2 = System.nanoTime()
+        df.write.mode("overwrite").format("noop").save()
+        ((t1 - t0) / 1e9, (t2 - t1) / 1e9)
       }
-      println(f"[prof] $name iter $i: $secs%.2f s (load1 $l1%.2f, steal $steal%.1f%%)")
+      println(f"[prof] $name iter $i: $secs%.2f s (build $build%.2f, plan $plan%.2f, " +
+        f"run ${secs - build - plan}%.2f; jobs ${jobs.get()}; load1 $l1%.2f, steal $steal%.1f%%)")
       import scala.jdk.CollectionConverters._
       val top = stageStats.asScala.toSeq.sortBy(-_._2._2).take(10)
       top.foreach { case (sid, (n, tot, mx, sr, sw, in)) =>

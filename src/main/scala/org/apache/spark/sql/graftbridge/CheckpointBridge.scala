@@ -8,7 +8,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   *
   * Under adaptive execution, `Dataset.checkpoint`/`localCheckpoint`
   * records `UnknownPartitioning` on the `LogicalRDD` it returns (measured
-  * on Spark 4.1.2 — `graft.tools.CutPartProbe`: both REPARTITION_BY_COL
+  * on Spark 4.1.2 — `CutPartProbe` at 94bd464, pinned by
+  * CheckpointPartitioningSpec: both REPARTITION_BY_COL
   * and REPARTITION_BY_NUM inputs come back `UnknownPartitioning(0)`), so
   * every downstream join/aggregate keyed like the checkpoint re-exchanges
   * it — for iterative operators that is a full E-sized shuffle per round

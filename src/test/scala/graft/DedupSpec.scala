@@ -825,7 +825,7 @@ class DedupSpec extends SparkSpec {
         .toDF("doc_id", "text")
       val all = docs.select($"doc_id", $"text").unionByName(edge)
       val native = chunkLists(Dedup.cdcChunks(all, modulus))
-      val windowed = chunkLists(Dedup.cdcChunksWindowed(all, modulus))
+      val windowed = chunkLists(OperatorTwins.cdcChunksWindowed(all, modulus))
       assert(native.size > 400, s"vacuous corpus: ${native.size} docs")
       assert(native.keySet == windowed.keySet,
         s"modulus=$modulus doc sets differ: ${
@@ -840,7 +840,7 @@ class DedupSpec extends SparkSpec {
       val degenerate = Seq[(Long, Option[String])](
         (900101L, Some("")), (900102L, None)).toDF("doc_id", "text")
       val dn = chunkLists(Dedup.cdcChunks(degenerate, modulus))
-      val dw = chunkLists(Dedup.cdcChunksWindowed(degenerate, modulus))
+      val dw = chunkLists(OperatorTwins.cdcChunksWindowed(degenerate, modulus))
       assert(dn == dw, s"modulus=$modulus degenerate: native=$dn windowed=$dw")
       assert(dn == Map(900101L -> Seq("")), s"got $dn")
     }

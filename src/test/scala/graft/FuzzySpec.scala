@@ -27,7 +27,7 @@ class FuzzySpec extends SparkSpec {
     for (d <- Seq(1, 2)) {
       val native = df.select($"s", Fuzzy.deletionVariants($"s", d).as("v"))
         .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
-      val hof = df.select($"s", Fuzzy.deletionVariantsHof($"s", d).as("v"))
+      val hof = df.select($"s", OperatorTwins.deletionVariantsHof($"s", d).as("v"))
         .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
       keys.foreach { k =>
         assert(native(k) == hof(k),

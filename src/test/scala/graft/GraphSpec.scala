@@ -83,7 +83,8 @@ class GraphSpec extends SparkSpec {
     // Mirrors one labelPropagation round over the SAME nbrs-cut shape the
     // operator builds (Lineage.cutPartitioned on nbr): the checkpoint
     // must come back partitioning-aware — under AQE a PLAIN cut records
-    // UnknownPartitioning (CutPartProbe, r14) — so the round join needs
+    // UnknownPartitioning (CutPartProbe at 94bd464, r14;
+    // CheckpointPartitioningSpec pins it) — so the round join needs
     // NO exchange on the E-sized nbrs side; only the labels side (spelled
     // as a literal here so the branches are distinguishable) shuffles to
     // co-partition. If the assertion were lost, the nbrs branch would

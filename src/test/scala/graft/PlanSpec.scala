@@ -82,7 +82,7 @@ class PlanSpec extends SparkSpec {
     // r10: the candidate joins are UNHINTED (cand/candIds are corpus-
     // proportional in the honest near-dup regime) — at gate scale AQE must
     // still convert them to broadcasts from runtime sizes, so un-hinting
-    // costs nothing where broadcast is right; NearDupScale demonstrates
+    // costs nothing where broadcast is right; NearDupScale (at 94bd464) demonstrated
     // the same code taking the shuffle-join path when pairs ∝ corpus
     val fp = finalizedPlan("q46_minhash_lsh")
     assert(fp.contains("BroadcastHashJoin"),
@@ -257,7 +257,7 @@ class PlanSpec extends SparkSpec {
     // threshold must NOT — a condition-referenced column is extracted for
     // every key-matched combo in SMJ codegen, so a threshold conjunct puts
     // the 2 KB shingle arrays on the Σ occ² fan (measured 20 µs/combo,
-    // Prof104BL). The _mid guard pins the threshold filter above the join;
+    // Prof104BL at 94bd464). The _mid guard pins the threshold filter above the join;
     // this assert fails if the optimizer ever merges it back.
     assert(p.contains("is_first_shared_prefix"),
       s"canonical-bucket check missing from the plan:\n$p")

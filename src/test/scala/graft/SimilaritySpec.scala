@@ -241,7 +241,7 @@ class SimilaritySpec extends SparkSpec {
     def check(embs: org.apache.spark.sql.DataFrame, k: Int, iters: Int,
         tag: String): Unit = {
       val got = canon(Similarity.kmeansFit(embs, k, iters, "embedding", "vec_id"))
-      val ref = canon(Similarity.kmeansFitDistributed(embs, k, iters, "embedding", "vec_id"))
+      val ref = canon(OperatorTwins.kmeansFitDistributed(embs, k, iters, "embedding", "vec_id"))
       assert(got._1 == ref._1, s"$tag: centroids diverge: ${got._1} vs ${ref._1}")
       assert(got._2 == ref._2, s"$tag: assignments diverge")
     }
@@ -276,7 +276,7 @@ class SimilaritySpec extends SparkSpec {
     def cells(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     val got = cells(Similarity.covarianceCensus(embs))
-    val ref = cells(Similarity.covarianceCensusJoin(embs))
+    val ref = cells(OperatorTwins.covarianceCensusJoin(embs))
     assert(got.keySet == ref.keySet, "census cell sets diverge")
     val bad = got.collect { case (k, v) if v != ref(k) => (k, v, ref(k)) }
     assert(bad.isEmpty, s"census cells diverge: ${bad.take(5).mkString(", ")}")
@@ -500,12 +500,12 @@ class SimilaritySpec extends SparkSpec {
       .toDF("i", "j", "c")
     for (iters <- Seq(1, 4, 8)) {
       val drv = Similarity.powerRoundsDriver(m, iters)
-      val dist = Similarity.powerRounds(covDf, iters).collect()
+      val dist = OperatorTwins.powerRounds(covDf, iters).collect()
         .map(r => r.getInt(0) -> r.getDouble(1)).toMap
       (0 until d).foreach(i => assert(drv(i) == dist(i),
         s"iters=$iters pos=$i driver=${drv(i)} distributed=${dist(i)}"))
       val lamD = Similarity.rayleighDriver(m, drv)
-      val lamX = Similarity.rayleigh(covDf,
+      val lamX = OperatorTwins.rayleigh(covDf,
         (0 until d).map(i => (i, drv(i))).toDF("pos", "w"))
         .collect().head.getDouble(0)
       assert(lamD == lamX, s"iters=$iters rayleigh driver=$lamD dist=$lamX")
@@ -515,12 +515,12 @@ class SimilaritySpec extends SparkSpec {
       graft.core.Tables.embeddings(spark, sf0001))
     val (poss, mm) = Similarity.covMatrix(cov)
     val drv = Similarity.powerRoundsDriver(mm, 8)
-    val dist = Similarity.powerRounds(cov, 8).collect()
+    val dist = OperatorTwins.powerRounds(cov, 8).collect()
       .map(r => r.getInt(0) -> r.getDouble(1)).toMap
     poss.indices.foreach(k => assert(drv(k) == dist(poss(k)),
       s"gate census pos=${poss(k)} driver=${drv(k)} dist=${dist(poss(k))}"))
     val lamD = Similarity.rayleighDriver(mm, drv)
-    val lamX = Similarity.rayleigh(cov,
+    val lamX = OperatorTwins.rayleigh(cov,
       poss.indices.map(k => (poss(k), drv(k))).toDF("pos", "w"))
       .collect().head.getDouble(0)
     assert(lamD == lamX, s"gate census rayleigh driver=$lamD dist=$lamX")

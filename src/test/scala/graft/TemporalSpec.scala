@@ -474,7 +474,7 @@ class TemporalSpec extends SparkSpec {
     // FULL history (O(history²) work); the RANGE frame keeps each list
     // to the ~700 touches inside the 7-day horizon. The assertion is
     // correctness (conservation + per-window counts); the wall-clock
-    // proof lives in tools/AuditScale bot mode.
+    // proof lived in AuditScale's bot mode (at 94bd464).
     val minuteUs = 60000000L
     val spacing = 864 * minuteUs / 60 // one event every 14.4 min -> 100/day
     val n = 100000
