@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
 # Pre-commit gate — the exact sequence CLAUDE.md mandates before every
-# commit (mirrors the driver's t2 gate + test suite). Usage:
+# commit: compile, tests, Verify + the DuckDB oracle, and the Z→μμ
+# benchmark's output check at seed 0. Usage:
 #   scripts/gate.sh [sfDir]        # default /root/testdata/sf0.01
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -21,4 +22,13 @@ case "$SUMMARY" in
   *) echo "== gate FAILED: Verify =="; exit 1 ;;
 esac
 python3 scripts/check.py "$SF" "$OUT"
+echo "== Z→μμ histograms against the recorded seed-0 digest =="
+# The benchmark's last stdout line is its JSON result; run.py exits
+# non-zero when an output check fails, so read the line either way.
+RESULT="$(python3 perfbench/run.py --workload zmumu-samples --seed 0 --seconds 1 --trace 0 | tail -1 || true)"
+echo "${RESULT:-no result line (the benchmark did not finish)}"
+case "$RESULT" in
+  *'"correct": true'*) ;;
+  *) echo "== gate FAILED: zmumu-samples outputs =="; exit 1 ;;
+esac
 echo "== gate PASSED =="

@@ -5,30 +5,38 @@ import scala.collection.mutable
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, AttributeSet, BindReferences, Expression, GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, AttributeSet, BindReferences, CaseWhen, Cast, Expression, GenericInternalRow, Or, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, UnaryNode}
 import org.apache.spark.sql.catalyst.util.truncatedString
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.SQLMetrics
 import org.apache.spark.sql.graftbridge.PlanBridge
-import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, IntegerType, LongType, NumericType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The map-side dense fill behind [[HistogramPass]]: every plot's bins, in
   * one flat array set per partition, filled in one pass over the rows.
   *
-  * Per plot, a bucket expression (int; null = the plot's selection failed
-  * or its value is null); per weight source, a double expression (null =
-  * skipped in the sums); optionally a file column. Plot `p` owns slots
-  * `offset_p .. offset_p + nBins_p + 1` (under/overflow included), so the
-  * kernel holds Σ(nBins+2) counters — independent of the row count.
+  * Inputs: the plots' values (numeric), their selections' flags (boolean;
+  * null = false), the weight sources (double; null = skipped in the sums)
+  * and optionally a file column. Each [[DenseFill.Slot]] names one plot's
+  * binning and the indices of its value, flag and weight. Plot `p` owns
+  * slots `offset_p .. offset_p + nBins_p + 1` (under/overflow included), so
+  * the kernel holds Σ(nBins+2) counters — independent of the row count.
   *
-  * The kernel evaluates these expressions itself, through a generated
-  * projection (pooled per executor, see `DenseFillExec.borrow`). That
-  * projection splits its code into small methods and shares common
-  * subexpressions across plots; the same ~60 bucket expressions spelled as
-  * one whole-stage-codegen projection compile to a single method too large
-  * for the JIT, which then interprets it.
+  * The kernel evaluates the inputs itself, through a generated projection
+  * (pooled per executor, see `DenseFillExec.borrow`), and bins each value
+  * with [[Binning.bucketOf]]: no bucket expression is planned per plot.
+  * The projection splits its code into small methods and shares common
+  * subexpressions; the same inputs spelled as one whole-stage-codegen
+  * projection compile to a single method too large for the JIT, which then
+  * interprets it.
+  * Values are deduplicated on their analysed, canonical form, so plots
+  * that share an observable evaluate it once per row, and only on rows
+  * where at least one of those plots' flags holds: the projection computes
+  * `CASE WHEN f₁ OR … OR fₖ THEN value END`. A value that cannot be
+  * computed for events failing its selections (an `element_at` past the
+  * end, under ANSI) is therefore never computed for them.
   *
   * Output, at the end of each partition, only its nonzero slots as
   * `(plot, bucket, n, sumw, sumw2)`. `n` counts every landing row; `sumw`
@@ -47,40 +55,54 @@ object DenseFill {
   /** The bucket of a per-file row count. */
   val FileBucket: Int = -2
 
-  /** One plot of the layout: its name, bin count and weight index. */
-  final case class Slot(plot: String, nBins: Int, weight: Int)
+  /** One plot of the layout: its name and binning, and the indices of its
+    * value, selection flag and weight among the fill's inputs. */
+  final case class Slot(plot: String, binning: Binning, value: Int, flag: Int, weight: Int)
 
   def ensureRegistered(spark: SparkSession): Unit =
     if (!spark.experimental.extraStrategies.contains(DenseFillStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ DenseFillStrategy
 
-  /** Fill over `input`: `buckets(i)` is plot `layout(i)`'s bucket (int),
-    * `weights(j)` weight source j (double), `file` an optional string
+  /** Fill over `input`: `layout(i)` bins `values(layout(i).value)` on rows
+    * where `flags(layout(i).flag)` holds, weighted by
+    * `weights(layout(i).weight)` (double); `file` is an optional string
     * column of `input` naming each row's file. */
   def apply(
-      input: DataFrame, layout: Seq[Slot], buckets: Seq[Column], weights: Seq[Column],
-      file: Option[Column]): DataFrame = {
-    require(layout.size == buckets.size, "one bucket expression per plot")
-    require(layout.forall(s => s.nBins > 0 && s.weight >= 0 && s.weight < weights.size),
-      "every plot needs nBins > 0 and a weight index")
+      input: DataFrame, layout: Seq[Slot], values: Seq[Column], flags: Seq[Column],
+      weights: Seq[Column], file: Option[Column]): DataFrame = {
+    require(layout.forall(s => s.value >= 0 && s.value < values.size && s.flag >= 0 &&
+      s.flag < flags.size && s.weight >= 0 && s.weight < weights.size),
+      "every plot needs a value, flag and weight index")
     val spark = input.sparkSession
     ensureRegistered(spark)
     // resolve the expressions against the input through a projection
-    val (exprs, child) = input.select(buckets ++ weights ++ file: _*).queryExecution.analyzed match {
+    val (exprs, child) = input.select(values ++ flags ++ weights ++ file: _*).queryExecution.analyzed match {
       case Project(list, c) => (list.map { case a: Alias => a.child; case e => e }, c)
       case other => sys.error(s"DenseFill: unexpected analyzed input ${other.nodeName}")
     }
-    val (b, rest) = exprs.splitAt(buckets.size)
-    val (w, f) = rest.splitAt(weights.size)
-    def check(what: String, es: Seq[Expression], t: DataType) = es.foreach(e =>
-      require(e.dataType == t, s"DenseFill: $what $e is ${e.dataType.simpleString}, not ${t.simpleString}"))
-    check("bucket", b, IntegerType)
-    check("weight", w, DoubleType)
-    check("file", f, StringType)
+    val (v, rest) = exprs.splitAt(values.size)
+    val (f, rest2) = rest.splitAt(flags.size)
+    val (w, fl) = rest2.splitAt(weights.size)
+    def check(what: String, es: Seq[Expression], ok: DataType => Boolean, t: String) = es.foreach(e =>
+      require(ok(e.dataType), s"DenseFill: $what $e is ${e.dataType.simpleString}, not $t"))
+    check("value", v, _.isInstanceOf[NumericType], "numeric")
+    check("flag", f, _ == BooleanType, "boolean")
+    check("weight", w, _ == DoubleType, "double")
+    check("file", fl, _ == StringType, "string")
+    // one kernel input per distinct value the layout uses, widened to double
+    // and computed only where one of its plots' flags holds
+    val canon = v.map(_.canonicalized)
+    val distinct = layout.map(s => canon(s.value)).distinct
+    val slots = layout.map(s => s.copy(value = distinct.indexOf(canon(s.value))))
+    val gated = distinct.indices.map { i =>
+      val x = v(canon.indexOf(distinct(i)))
+      val on = slots.filter(_.value == i).map(_.flag).distinct.map(f).reduce(Or)
+      CaseWhen(Seq(on -> (if (x.dataType == DoubleType) x else Cast(x, DoubleType))))
+    }
     // only the referenced columns reach the kernel, so the scan prunes
-    val used = AttributeSet(exprs.flatMap(_.references))
-    val fill = DenseFillPlan(layout, b, w, f.headOption, DenseFillPlan.outputAttributes(),
+    val used = AttributeSet((gated ++ f ++ w ++ fl).flatMap(_.references))
+    val fill = DenseFillPlan(slots, gated, f, w, fl.headOption, DenseFillPlan.outputAttributes(),
       Project(child.output.filter(used.contains), child))
     // Aliased on top, so the analyzer can renew the output ids when the
     // result is joined with itself: it re-aliases projections, not unknown
@@ -93,7 +115,8 @@ object DenseFill {
   * attributes it produces (carried as a field so copies keep their ids). */
 case class DenseFillPlan(
     layout: Seq[DenseFill.Slot],
-    buckets: Seq[Expression],
+    values: Seq[Expression],
+    flags: Seq[Expression],
     weights: Seq[Expression],
     file: Option[Expression],
     output: Seq[Attribute],
@@ -118,7 +141,8 @@ object DenseFillPlan {
   * above it carries its ≤ Σ(nBins+2) (+ files) rows per partition. */
 case class DenseFillExec(
     layout: Seq[DenseFill.Slot],
-    buckets: Seq[Expression],
+    values: Seq[Expression],
+    flags: Seq[Expression],
     weights: Seq[Expression],
     file: Option[Expression],
     output: Seq[Attribute],
@@ -133,11 +157,15 @@ case class DenseFillExec(
     s"DenseFill ${truncatedString(layout.map(_.plot), "[", ", ", "]", maxFields)}"
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val bound = BindReferences.bindReferences(buckets ++ weights ++ file, child.output)
-    val nB = buckets.size
+    val bound = BindReferences.bindReferences(values ++ flags ++ weights ++ file, child.output)
+    val nV = values.size
+    val nF = flags.size
     val nW = weights.size
-    val fIdx = if (file.isDefined) nB + nW else -1
-    val nBins = layout.map(_.nBins).toArray
+    val fIdx = if (file.isDefined) nV + nF + nW else -1
+    val binnings = layout.map(_.binning).toArray
+    val nBins = binnings.map(_.nBins)
+    val valueOf = layout.map(_.value).toArray
+    val flagOf = layout.map(_.flag).toArray
     val weightOf = layout.map(_.weight).toArray
     val names = layout.map(_.plot).toArray
     val offset = nBins.scanLeft(0)(_ + _ + 2)
@@ -150,6 +178,7 @@ case class DenseFillExec(
       val sumw = new Array[Double](slots)
       val sumw2 = new Array[Double](slots)
       val weighted = new Array[Boolean](slots)
+      val on = new Array[Boolean](nF)
       val w = new Array[Double](nW)
       val wNull = new Array[Boolean](nW)
       val files = mutable.LinkedHashMap.empty[UTF8String, Long]
@@ -158,15 +187,20 @@ case class DenseFillExec(
       while (rows.hasNext) {
         val row = eval(rows.next())
         var j = 0
+        while (j < nF) {
+          on(j) = !row.isNullAt(nV + j) && row.getBoolean(nV + j)
+          j += 1
+        }
+        j = 0
         while (j < nW) {
-          wNull(j) = row.isNullAt(nB + j)
-          if (!wNull(j)) w(j) = row.getDouble(nB + j)
+          wNull(j) = row.isNullAt(nV + nF + j)
+          if (!wNull(j)) w(j) = row.getDouble(nV + nF + j)
           j += 1
         }
         var p = 0
-        while (p < nB) {
-          if (!row.isNullAt(p)) {
-            val b = row.getInt(p)
+        while (p < names.length) {
+          if (on(flagOf(p)) && !row.isNullAt(valueOf(p))) {
+            val b = binnings(p).bucketOf(row.getDouble(valueOf(p)))
             if (b < -1 || b > nBins(p))
               throw new IllegalStateException(
                 s"HistogramPass: plot '${names(p)}' bucket $b outside [-1, ${nBins(p)}]")
@@ -234,8 +268,8 @@ object DenseFillExec {
 
 object DenseFillStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case DenseFillPlan(layout, b, w, f, out, child) =>
-      DenseFillExec(layout, b, w, f, out, planLater(child)) :: Nil
+    case DenseFillPlan(layout, v, fl, w, f, out, child) =>
+      DenseFillExec(layout, v, fl, w, f, out, planLater(child)) :: Nil
     case _ => Nil
   }
 }

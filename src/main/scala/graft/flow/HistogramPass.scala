@@ -10,11 +10,12 @@ import org.apache.spark.sql.functions._
   * per sample (RDataFrame lazy multi-action model; reference
   * phaseII-analysis.py:368-510 registers everything before `:512` runs).
   * Naive Spark would launch one job — one full scan — per histogram.
-  * Instead, the [[DenseFill]] kernel evaluates every plot's bucket (null
-  * when its selection fails) and each selection's weight once per row,
-  * adds them into flat per-partition arrays of Σ_plots (nBins+2) slots,
-  * and emits only the nonzero slots. One `groupBy(plot, bucket)` merges
-  * the partitions:
+  * Instead, the [[DenseFill]] kernel takes each distinct plot value, each
+  * selection's flag and each weight source once per row, computes a value
+  * only where one of its plots' selections passes, bins it itself
+  * ([[Binning.bucketOf]]), adds the weights into flat per-partition arrays
+  * of Σ_plots (nBins+2) slots, and emits only the nonzero slots. One
+  * `groupBy(plot, bucket)` merges the partitions:
   *
   *   - ONE scan of the sample regardless of the number of plots;
   *   - no per-(event, plot) rows: the map side holds O(plots × bins)
@@ -41,15 +42,17 @@ object HistogramPass {
     require(plots.nonEmpty, "no plots registered")
     require(plots.map(_.name).distinct.size == plots.size, "duplicate plot names")
     val flagged = SelectionFlow.withFlags(df, plots.map(_.selection))
+    val values = plots.map(_.value).distinct
+    val flagCols = plots.map(_.selection.flagCol).distinct
     val weightCols = plots.map(_.selection.weightCol).distinct
-    val layout = plots.map(p =>
-      DenseFill.Slot(p.name, p.binning.nBins, weightCols.indexOf(p.selection.weightCol)))
-    val buckets = plots.map(p => when(p.selection.flag, p.binning.bucket(p.value)).cast("int"))
+    val layout = plots.map(p => DenseFill.Slot(p.name, p.binning, values.indexOf(p.value),
+      flagCols.indexOf(p.selection.flagCol), weightCols.indexOf(p.selection.weightCol)))
+    val flags = flagCols.map(col)
     val weights = weightCols.map(c => col(c).cast("double"))
     if (countFiles)
-      DenseFill(flagged.withColumn("__file", input_file_name()), layout, buckets, weights,
+      DenseFill(flagged.withColumn("__file", input_file_name()), layout, values, flags, weights,
         Some(col("__file")))
-    else DenseFill(flagged, layout, buckets, weights, None)
+    else DenseFill(flagged, layout, values, flags, weights, None)
   }
 
   /** The final aggregate over fill rows: one hash exchange on

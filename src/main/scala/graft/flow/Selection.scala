@@ -1,5 +1,6 @@
 package graft.flow
 
+import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -57,16 +58,24 @@ object SelectionFlow {
     * and codegen dedups the shared prefix (SURVEY.md §4 "shared filter
     * prefixes"). */
   def withFlags(df: DataFrame, leaves: Seq[Selection]): DataFrame = {
-    val ordered = nodes(leaves)
-    val cols: Seq[(String, Column)] = ordered.flatMap { s =>
-      val (flagExpr, wExpr) = s.parent match {
-        case None => (s.cut, s.weightFactor)
-        case Some(p) => (col(p.flagCol) && s.cut, col(p.weightCol) * s.weightFactor)
-      }
-      Seq(s.flagCol -> flagExpr, s.weightCol -> wExpr)
+    // Each withColumns is one analysis, so nodes share one until a node
+    // reads a column of the current batch (or reuses a name in it): one
+    // batch per depth on a chain or a star, columns in `nodes` order.
+    // Catalyst's CollapseProject merges the batches into one projection.
+    val batches = nodes(leaves).foldLeft(Vector.empty[Vector[Selection]]) { (bs, s) =>
+      if (bs.nonEmpty && !bs.last.exists(b => s.parent.contains(b) || b.name == s.name))
+        bs.init :+ (bs.last :+ s)
+      else bs :+ Vector(s)
     }
-    // Sequential withColumns in dependency order, collapsed by Catalyst's
-    // CollapseProject into a single projection.
-    cols.foldLeft(df) { case (acc, (n, c)) => acc.withColumn(n, c) }
+    batches.foldLeft(df) { (acc, batch) =>
+      val cols = batch.flatMap { s =>
+        val (flagExpr, wExpr) = s.parent match {
+          case None => (s.cut, s.weightFactor)
+          case Some(p) => (col(p.flagCol) && s.cut, col(p.weightCol) * s.weightFactor)
+        }
+        Seq(s.flagCol -> flagExpr, s.weightCol -> wExpr)
+      }
+      acc.withColumns(ListMap(cols: _*))
+    }
   }
 }

@@ -20,19 +20,14 @@ final case class HistogramResult(
 
 class WeightedHistogram(nBins: Int, lo: Double, hi: Double)
     extends Aggregator[(Double, Double), HistogramResult, HistogramResult] {
-  require(nBins > 0 && hi > lo)
-
-  private def bucketOf(x: Double): Int =
-    if (x < lo) 0
-    else if (x >= hi) nBins + 1
-    else 1 + math.floor((x - lo) * nBins / (hi - lo)).toInt
+  private val binning = EquidistantBinning(nBins, lo, hi)
 
   override def zero: HistogramResult =
     HistogramResult(new Array[Long](nBins + 2), new Array[Double](nBins + 2), new Array[Double](nBins + 2))
 
   override def reduce(b: HistogramResult, in: (Double, Double)): HistogramResult = {
     val (x, w) = in
-    val i = bucketOf(x)
+    val i = binning.bucketOf(x) + 1
     b.counts(i) += 1; b.sumw(i) += w; b.sumw2(i) += w * w
     b
   }

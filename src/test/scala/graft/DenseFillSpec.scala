@@ -5,11 +5,15 @@ import org.scalacheck.rng.Seed
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.flow._
+import graft.functions.CollectionOps.nth
 
 /** The dense-fill kernel behind `HistogramPass` against its exploding
-  * reference twin ([[ExplodedHistogramPass]]), over random plots, selection
-  * DAGs and both binnings, on inputs with null values, null weights, NaN
-  * and ±Infinity; plus its guard against buckets outside a plot's range. */
+  * reference twin ([[ExplodedHistogramPass]]), which bins with the Column
+  * spelling of each binning: over random plots, selection DAGs and both
+  * binnings, on double, float and int values that include nulls, null
+  * weights, NaN, ±Infinity, ±0.0, ±MaxValue, bin edges and the values just
+  * below them; plus its lazy evaluation of values and its guard against
+  * buckets outside a plot's range. */
 class DenseFillSpec extends SparkSpec {
   import spark.implicits._
 
@@ -43,17 +47,26 @@ class DenseFillSpec extends SparkSpec {
     }
   }
 
-  private val special = Gen.oneOf(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+  private val special = Gen.oneOf(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+    0.0, -0.0, Double.MaxValue, -Double.MaxValue)
+  /** Quarter-integers, and the double just below each: every edge of the
+    * half-integer grid binnings below (all variable ones, equidistant ones
+    * up to n = 2) is one of them. */
+  private val edge: Gen[Double] = for {
+    q <- Gen.choose(-32, 64); below <- Gen.oneOf(false, true)
+  } yield if (below) Math.nextDown(q / 4.0) else q / 4.0
   private def value(lo: Double, hi: Double): Gen[Option[Double]] = Gen.frequency(
-    6 -> Gen.choose(lo, hi).map(Some(_)), 2 -> Gen.const(None), 1 -> special.map(Some(_)))
+    5 -> Gen.choose(lo, hi).map(Some(_)), 3 -> edge.map(Some(_)), 2 -> Gen.const(None),
+    1 -> special.map(Some(_)))
 
-  private val rowsGen: Gen[List[(Option[Double], Option[Double], Option[Double], Int)]] =
+  private val rowsGen: Gen[List[(Option[Double], Option[Double], Option[Double], Int, Option[Float])]] =
     Gen.listOf(for {
       x <- value(-8.0, 14.0)
       y <- value(-3.0, 3.0)
       w <- value(-2.0, 5.0)
       k <- Gen.choose(-1, 9)
-    } yield (x, y, w, k))
+      z <- value(-8.0, 14.0)
+    } yield (x, y, w, k, z.map(_.toFloat)))
 
   private val binningGen: Gen[Binning] = Gen.oneOf(
     for {
@@ -61,9 +74,16 @@ class DenseFillSpec extends SparkSpec {
     } yield EquidistantBinning(n, lo, lo + width),
     for {
       start <- Gen.choose(-6.0, 2.0); widths <- Gen.choose(1, 5).flatMap(Gen.listOfN(_, Gen.choose(0.5, 4.0)))
-    } yield VariableBinning(widths.scanLeft(start)(_ + _)))
+    } yield VariableBinning(widths.scanLeft(start)(_ + _)),
+    // on the half-integer grid, so `edge` values fall on their edges
+    for {
+      n <- Gen.choose(1, 7); lo <- Gen.choose(-12, 4); width <- Gen.choose(1, 24)
+    } yield EquidistantBinning(n, lo / 2.0, lo / 2.0 + width / 2.0),
+    for {
+      start <- Gen.choose(-12, 4); widths <- Gen.choose(1, 5).flatMap(Gen.listOfN(_, Gen.choose(1, 8)))
+    } yield VariableBinning(widths.scanLeft(start)(_ + _).map(_ / 2.0)))
 
-  private val columns: Seq[Column] = Seq(col("x"), col("y"), col("k"), col("x") * col("y"))
+  private val columns: Seq[Column] = Seq(col("x"), col("y"), col("k"), col("z"), col("x") * col("y"))
   private val cuts: Seq[Column] = Seq(col("x") > 0, col("y") < 1.5, col("k") >= 3, col("x").isNull)
   private val weightFactors: Seq[Column] = Seq(lit(1.0), lit(0.5), col("y"), abs(col("x")))
 
@@ -88,7 +108,7 @@ class DenseFillSpec extends SparkSpec {
     val cases = for { rows <- rowsGen; plots <- plotsGen; parts <- Gen.choose(1, 3) } yield (rows, plots, parts)
     (0 until 24).foreach { i =>
       cases.apply(Gen.Parameters.default.withSize(30), Seed(7L + i)).foreach { case (rows, plots, parts) =>
-        val df = rows.toDF("x", "y", "w", "k").repartition(parts)
+        val df = rows.toDF("x", "y", "w", "k", "z").repartition(parts)
         assertSame(df, plots, s"case $i (${rows.size} rows, ${plots.size} plots)")
       }
     }
@@ -129,16 +149,60 @@ class DenseFillSpec extends SparkSpec {
     assert(h.union(h).count() == 4)
   }
 
-  test("a bucket outside [-1, nBins] fails with a named message, not a neighbour's bins") {
-    val layout = Seq(DenseFill.Slot("left", 3, 0), DenseFill.Slot("right", 3, 0))
-    def fill(bucket: Int) = DenseFill(Seq((bucket, 0, 1.0)).toDF("b", "ok", "w"), layout,
-      Seq(col("b"), col("ok")), Seq(col("w")), None).collect()
-    assert(fill(3).map(r => (r.getString(0), r.getInt(1))).toSet == Set(("left", 3), ("right", 0)))
-    Seq(4, -2).foreach { bad =>
-      val e = intercept[Exception](fill(bad))
-      val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
-      assert(messages.exists(m => m != null && m.contains(s"plot 'left' bucket $bad outside [-1, 3]")),
-        s"unexpected failure for bucket $bad: $e")
+  private val extremes = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+    Double.MaxValue, -Double.MaxValue, Double.MaxValue / 2, Double.MinPositiveValue, 0.0, -0.0,
+    1.0, Math.nextDown(1.0), 3.0, Math.nextDown(3.0))
+
+  /** Plot "left" bins `x` with `left` on every row; plot "right" owns the
+    * slots after it and its selection never passes. Merged over partitions. */
+  private def fillLeft(left: Binning): Array[(String, Int, Long)] = {
+    val df = extremes.map(x => (x, 1.0)).toDF("x", "w")
+    DenseFill(df,
+      Seq(DenseFill.Slot("left", left, 0, 0, 0), DenseFill.Slot("right", EquidistantBinning(3, 0.0, 3.0), 0, 1, 0)),
+      Seq(col("x")), Seq(lit(true), lit(false)), Seq(col("w")), None)
+      .groupBy("plot", "bucket").agg(sum("n")).collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
+  }
+
+  test("extreme values stay in [-1, nBins] and out of a neighbour's slots") {
+    Seq(EquidistantBinning(3, 0.0, 3.0), VariableBinning(Seq(0.0, 1.0, 2.0, 3.0))).foreach { b =>
+      val got = fillLeft(b)
+      assert(got.forall { case (p, bucket, _) => p == "left" && bucket >= -1 && bucket <= 3 }, got.toSeq)
+      val column = extremes.toDF("x").select(b.bucket(col("x"))).as[Int].collect()
+        .groupBy(identity).map { case (bucket, xs) => ("left", bucket, xs.length.toLong) }
+      assert(got.toSet == column.toSet, s"$b: kernel ${got.toSeq} vs Column $column")
     }
+  }
+
+  test("a bucket outside [-1, nBins] fails with a named message, not a neighbour's bins") {
+    // (MaxValue/2 − 0)·3 overflows to +Inf, so floor gives no int bucket;
+    // the Column spelling fails too (its int cast overflows under ANSI)
+    val wide = EquidistantBinning(3, 0.0, Double.MaxValue)
+    intercept[Exception](Seq(Double.MaxValue / 2).toDF("x").select(wide.bucket(col("x"))).collect())
+    val e = intercept[Exception](fillLeft(wide))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(messages.exists(m => m != null && m.contains(s"plot 'left' bucket ${Int.MaxValue} outside [-1, 3]")),
+      s"unexpected failure: $e")
+  }
+
+  test("a value is computed only on rows where one of its plots' selections passes") {
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    val df = Seq((Seq(5.0), 1.0), (Seq(5.0, 7.0), 2.0), (Seq.empty[Double], 1.0)).toDF("pts", "w")
+      .select(transform(col("pts"), p => struct(p.as("pt"))).as("jets"), col("w"))
+    val root = Selection.root("all", col("w"))
+    val twoJets = root.refine("ge2", size(col("jets")) >= 2)
+    val second = nth(col("jets"), 1)("pt")
+    val got = collectStats(HistogramPass.run(df, Seq(
+      Plot("second", second, twoJets, EquidistantBinning(10, 0.0, 10.0)),
+      Plot("n", size(col("jets")), root, EquidistantBinning(3, 0.0, 3.0)))))
+    assert(got == Map(("second", 7) -> ((1L, Some(2.0), Some(4.0))),
+      ("n", 0) -> ((1L, Some(1.0), Some(1.0))), ("n", 1) -> ((1L, Some(1.0), Some(1.0))),
+      ("n", 2) -> ((1L, Some(2.0), Some(4.0)))))
+    // on the root, events with fewer than two jets read past the end
+    val e = intercept[Exception](HistogramPass.run(df,
+      Seq(Plot("second", second, root, EquidistantBinning(10, 0.0, 10.0)))).collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(messages.exists(m => m != null && m.contains("INVALID_ARRAY_INDEX_IN_ELEMENT_AT")),
+      s"unexpected failure: $e")
   }
 }

@@ -11,6 +11,7 @@ class HistogramSpec extends SparkSpec {
     val df = Seq(-1.0, 0.0, 1.99, 2.0, 7.99, 8.0, 100.0).toDF("x")
     val got = df.select(b.bucket(col("x")).as("b")).as[Int].collect().toSeq
     assert(got == Seq(-1, 0, 0, 1, 3, 4, 4))
+    assert(Seq(-1.0, 0.0, 1.99, 2.0, 7.99, 8.0, 100.0).map(b.bucketOf) == got)
   }
 
   test("variable binning: edges, underflow, overflow") {
@@ -18,6 +19,20 @@ class HistogramSpec extends SparkSpec {
     val df = Seq(-0.5, 0.0, 0.99, 1.0, 9.99, 99.0, 100.0).toDF("x")
     val got = df.select(b.bucket(col("x")).as("b")).as[Int].collect().toSeq
     assert(got == Seq(-1, 0, 0, 1, 1, 2, 3))
+    assert(Seq(-0.5, 0.0, 0.99, 1.0, 9.99, 99.0, 100.0).map(b.bucketOf) == got)
+  }
+
+  test("a null value has no bucket in either binning and fills nothing") {
+    val eq = EquidistantBinning(2, 0.0, 10.0)
+    val vb = VariableBinning(Seq(0.0, 1.0, 10.0))
+    val df = Seq[(Option[Double], Double)]((None, 1.0), (Some(4.0), 1.0)).toDF("x", "w")
+    val buckets = df.select(eq.bucket(col("x")), vb.bucket(col("x"))).collect()
+      .map(r => (Option(r.get(0)), Option(r.get(1)))).toSeq
+    assert(buckets == Seq((None, None), (Some(0), Some(1))))
+    val root = Selection.root("all", col("w"))
+    val filled = HistogramPass.run(df, Seq(Plot("eq", col("x"), root, eq), Plot("var", col("x"), root, vb)))
+      .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
+    assert(filled == Map(("eq", 0) -> 1L, ("var", 1) -> 1L))
   }
 
   test("single-pass multi-histogram: weighted contents + sumw2") {

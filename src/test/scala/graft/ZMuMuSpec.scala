@@ -46,6 +46,19 @@ class ZMuMuSpec extends SparkSpec {
     assert(scans.size == 1, s"expected 1 source scan in plan, got ${scans.size}")
   }
 
+  test("the fill evaluates each distinct plot value once: 14 values for 67 plots") {
+    import org.apache.spark.sql.functions.lit
+    import graft.flow.{DenseFillPlan, EquidistantBinning, HistogramPass, Plot}
+    val (noSel, chain) = ZMuMuAnalysis.selections()
+    // the plots SampleRunner fills: the 61 histograms and one cutflow plot per node
+    val plots = ZMuMuAnalysis.plots(noSel, chain) ++
+      chain.map(s => Plot("__cutflow__" + s.name, lit(0.5), s, EquidistantBinning(1, 0, 1)))
+    val fill = HistogramPass.run(ZMuMuAnalysis.withObjects(events), plots)
+      .queryExecution.optimizedPlan.collectFirst { case d: DenseFillPlan => d }.get
+    assert(plots.size == 67)
+    assert((fill.layout.size, fill.values.size, fill.flags.size, fill.weights.size) == ((67, 14, 6, 6)))
+  }
+
   test("sample config YAML parses and normalizes like the reference") {
     val cfg = graft.core.AnalysisConfig.fromYamlString(
       """tree: myana/mytree
